@@ -20,6 +20,14 @@ idiomatic Spark DataFrame pipeline over multi-turn agent transcripts:
 
 Everything is DataFrame/SQL-first: Catalyst handles pushdown, pruning, join
 selection and AQE; Python appears only inside Arrow-batched pandas UDFs.
+That holds because every constant table (ontologies, rule metadata, query
+terms, the empty manifest) is a JVM ``LocalRelation`` built from the same
+VALUES text the DuckDB oracles use: ``createDataFrame(list)`` would make it
+a Python RDD, and every broadcast of it would start Python tasks.
+Importing the package also installs ``lazy_zipimport`` so that a Python
+worker's per-task import-cache invalidation stays cheap on Python < 3.12.
 """
+
+from cca_spark import lazy_zipimport  # noqa: F401  (installs on import)
 
 __version__ = "0.1.0"

@@ -53,40 +53,20 @@ CATEGORY_PARENTS: list[tuple[str, str]] = [
 ]
 
 
-# Dimension DataFrames are memoized per SparkSession: enrichment runs once
-# per job in production, but benchmarks/tests compose many pipelines per
-# session and re-running createDataFrame + broadcast prep is pure
-# driver-side fixed cost that pollutes scaling measurements.
-_dim_cache: dict[tuple[int, str], DataFrame] = {}
-
-
-def _memo(spark: SparkSession, key: str, build) -> DataFrame:
-    k = (id(spark), key)
-    if k not in _dim_cache:
-        _dim_cache[k] = build()
-    return _dim_cache[k]
-
-
+# Every constant table is a JVM LocalRelation parsed from the VALUES text
+# the DuckDB oracles use: one definition for both engines, and broadcasting
+# it starts no Python task (a createDataFrame(list) table is a Python RDD).
+# One SQL parse per call, so there is nothing worth memoizing.
 def tool_ontology_df(spark: SparkSession) -> DataFrame:
-    return _memo(
-        spark,
-        "tools",
-        lambda: spark.createDataFrame(
-            TOOL_ONTOLOGY, "tool string, category string, family string, risk_level int"
-        ),
-    )
+    return spark.sql(f"SELECT * FROM {tool_ontology_values_sql()}")
 
 
 def role_ontology_df(spark: SparkSession) -> DataFrame:
-    return _memo(
-        spark,
-        "roles",
-        lambda: spark.createDataFrame(ROLE_ONTOLOGY, "role string, actor_kind string"),
-    )
+    return spark.sql(f"SELECT * FROM {role_ontology_values_sql()}")
 
 
 def category_edges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CATEGORY_PARENTS, "child string, parent string")
+    return spark.sql(f"SELECT * FROM {category_edges_values_sql()}")
 
 
 def ontology_closure_df(spark: SparkSession, max_iters: int = 10) -> DataFrame:

@@ -536,7 +536,11 @@ def parse_facts(
     per-match group extraction and the value bytes' Arrow crossing —
     manual column pruning for consumers (the range-containment join) that
     never read ``value``; Catalyst cannot push the projection into the
-    opaque kernel."""
+    opaque kernel. The two contradict each other (slim drops the
+    entity_id and spans that ``with_value=False`` keeps), so asking for
+    both raises ``ValueError``."""
+    if slim and not with_value:
+        raise ValueError("parse_facts: slim=True contradicts with_value=False; choose one")
     if strategy == "pandas":
         if slim:
             kernel = _extract_batch_slim

@@ -161,6 +161,16 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+def bm25_query_terms_values_sql() -> str:
+    """The query terms as a VALUES list, shared with the DuckDB oracle."""
+    return "VALUES " + ", ".join(f"('{t}')" for t in BM25_QUERY_TERMS)
+
+
+def bm25_query_terms_df(spark: SparkSession) -> DataFrame:
+    """The query terms as a JVM LocalRelation (see ``ontology.py``)."""
+    return spark.sql(f"SELECT * FROM ({bm25_query_terms_values_sql()}) AS qt(token)")
+
+
 # THE retrieval tokenization: single-space split, empty tokens dropped.
 # Defined once — tfidf, bm25's tf explode, bm25's no-explode dl
 # projection, decontamination grams, LM scoring, and packing must all
@@ -268,9 +278,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     from pyspark.sql import Window
 
     toks = _doc_tokens(spark, sf_dir)
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS], "token string")
-    )
+    qt = F.broadcast(bm25_query_terms_df(spark))
     # dl = number of non-empty tokens; docs with zero tokens drop out,
     # matching the former groupBy-over-explode semantics (and the oracle)
     dl = (

@@ -359,15 +359,14 @@ SELECT doc_id, token, tf, tfidf, cast(rank AS int) AS rank FROM (
 
 
 def bm25_retrieval_sql(k: int = 20) -> str:
-    from cca_spark.operators.textstats import BM25_B, BM25_K1, BM25_QUERY_TERMS
+    from cca_spark.operators.textstats import BM25_B, BM25_K1, bm25_query_terms_values_sql
 
-    terms = ", ".join(f"('{t}')" for t in BM25_QUERY_TERMS)
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ),
 toks_ne AS (SELECT doc_id, token FROM toks WHERE token <> ''),
-qt(token) AS (VALUES {terms}),
+qt(token) AS ({bm25_query_terms_values_sql()}),
 dl AS (SELECT doc_id, count(*) AS dl FROM toks_ne GROUP BY doc_id),
 stats AS (SELECT avg(cast(dl AS double)) AS avgdl, count(*) AS n_docs FROM dl),
 tf AS (

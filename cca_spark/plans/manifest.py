@@ -50,7 +50,10 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     try:
         return spark.read.parquet(path)
     except Exception:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        # no manifest yet: an empty LocalRelation, so no Python task runs
+        fields = (f.split() for f in MANIFEST_SCHEMA.split(", "))
+        cols = ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in fields)
+        return spark.sql(f"SELECT {cols} WHERE false")
 
 
 def processed_partitions(spark: SparkSession, out_dir: str) -> set[str]:

@@ -693,19 +693,18 @@ DEAD_LETTER_SINK = "dead_letter"
 
 
 def rules_df(spark):
-    return spark.createDataFrame(
-        [
-            (r.rule_id, r.sink, r.pattern, r.significance, r.tool_scope)
-            for r in RULES
-        ],
-        "rule_id string, sink string, pattern string, significance int, tool_scope string",
-    )
+    """The rule metadata as a JVM LocalRelation (see ``ontology.py``); the
+    patterns stay in ``RULES`` for the kernels that compile them."""
+    return spark.sql(f"SELECT * FROM {rules_values_sql()}")
 
 
 def rules_values_sql() -> str:
     """Inline VALUES relation (rule metadata only; patterns are applied
     engine-side, not stored as SQL strings, to avoid double-escaping)."""
+    def scope(r):
+        return "NULL" if r.tool_scope is None else f"'{r.tool_scope}'"
+
     rows = ", ".join(
-        f"('{r.rule_id}', '{r.sink}', {r.significance})" for r in RULES
+        f"('{r.rule_id}', '{r.sink}', {r.significance}, {scope(r)})" for r in RULES
     )
-    return f"(VALUES {rows}) AS rules(rule_id, sink, significance)"
+    return f"(VALUES {rows}) AS rules(rule_id, sink, significance, tool_scope)"
