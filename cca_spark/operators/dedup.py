@@ -234,15 +234,13 @@ def lsh_verified_pairs(
     )
     if max_shingle_df is not None:
         dfreq = shingles.groupBy("shingle").agg(F.count("*").alias("sh_df"))
-        shingles = (
-            shingles.join(
-                dfreq.filter(F.col("sh_df") > max_shingle_df), "shingle", "left_anti"
-            )
-            # the anti join shuffles by shingle; restore the doc_id
-            # partitioning so the signature agg stays exchange-free
-            .repartition(F.col("doc_id"))
-            .persist(StorageLevel.DISK_ONLY)
-        )
+        # no repartition(doc_id) after the anti join: the cached scan would
+        # not report that partitioning, so the signature agg shuffles by
+        # doc_id anyway (after its map-side partial min). Persisted: the
+        # signature agg and the verify both read it.
+        shingles = shingles.join(
+            dfreq.filter(F.col("sh_df") > max_shingle_df), "shingle", "left_anti"
+        ).persist(StorageLevel.DISK_ONLY)
     sigs = minhash_signatures(corpus, shingles=shingles, with_count=True).localCheckpoint(
         eager=True
     )

@@ -14,14 +14,21 @@ routed-row **set equality** hold across cluster sizes.
 
 Two physical strategies, same logical result:
 
-- ``strategy="pandas"`` (default): ``mapInPandas`` with the regex bank
-  compiled **once per Arrow batch iterator** (i.e. once per task), applied
-  via ``pandas.Series.str`` vectorized ops where possible. This is the
-  north-star path: Arrow batches in, Arrow batches out, zero per-row Spark
-  UDF calls.
+- ``strategy="pandas"`` (default): ``mapInPandas`` over ONE Python-``re``
+  fact kernel (``_extract_batch``), with the regex bank compiled **once
+  per Arrow batch iterator** (i.e. once per task) and vectorized
+  ``pandas.Series.str`` candidate gates in front of a single ``finditer``
+  loop. Arrow batches in, Arrow batches out, zero per-row Spark UDF calls.
 - ``strategy="sql"``: pure JVM ``regexp_extract_all`` — stays inside
   whole-stage codegen; used as the bench comparison point and for oracle
   parity checks.
+
+The stream variants are column selections, not kernels: ``with_value=False``
+runs the same kernel without the value column, and ``slim=True`` is the
+no-value stream projected onto SLIM_FACT_COLUMNS — one selection tail
+shared by both strategies. The aggregate-only flagship does not parse facts
+at all: ``parse_fact_partials`` counts matches per key with RE2 on the Arrow
+batch (``_extract_partials_arrow``).
 """
 
 from __future__ import annotations
@@ -29,6 +36,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -79,13 +87,9 @@ def _candidate_masks(texts_s, tools_s, roles_s, bank: list[BankEntry]) -> list:
                 am = texts_s.str.contains(rule.anchor, regex=False)
             else:
                 # anchor-scan only the role's rows; others stay False
-                import numpy as np
-
                 am_vals = np.zeros(len(texts_s), dtype=bool)
                 sub = texts_s[rm]
                 am_vals[rm] = sub.str.contains(rule.anchor, regex=False).to_numpy()
-                import pandas as pd
-
                 am = pd.Series(am_vals, index=texts_s.index)
             anchor_masks[key] = am
         if rule.tool_scope is None:
@@ -98,205 +102,48 @@ def _candidate_masks(texts_s, tools_s, roles_s, bank: list[BankEntry]) -> list:
             out.append(am & sm)
     return out
 
-FACT_SCHEMA = (
-    "entity_id string, conv_id string, turn_idx int, role string, "
-    "tool string, ts timestamp_ntz, rule_id string, sink string, "
-    "significance int, span_start int, span_end int, value string"
-)
 
-FACT_COLUMNS = [
-    "entity_id",
-    "conv_id",
-    "turn_idx",
-    "role",
-    "tool",
-    "ts",
-    "rule_id",
-    "sink",
-    "significance",
-    "span_start",
-    "span_end",
-    "value",
-]
+# The kernel's output columns in order, each column's Spark type written
+# once; the column lists and the kernel schema are derived from it.
+# entity_id is not here: parse_facts builds it JVM-side (r6) as a
+# concat_ws projection — identical bytes, built in codegen, never shipped
+# through Arrow.
+_KERNEL_TYPES = {
+    "conv_id": "string",
+    "turn_idx": "int",
+    "role": "string",
+    "tool": "string",
+    "ts": "timestamp_ntz",
+    "rule_id": "string",
+    "sink": "string",
+    "significance": "int",
+    "span_start": "int",
+    "span_end": "int",
+    "value": "string",
+}
 
-# What the full pandas kernel emits through Arrow: FACT_COLUMNS minus the
-# derived entity_id, which parse_facts reattaches as a JVM concat_ws
-# projection (r6) — identical bytes, built in codegen instead of pandas.
-KERNEL_FACT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, "
-    "tool string, ts timestamp_ntz, rule_id string, sink string, "
-    "significance int, span_start int, span_end int, value string"
-)
+KERNEL_FACT_COLUMNS = list(_KERNEL_TYPES)
 
-KERNEL_FACT_COLUMNS = [c for c in FACT_COLUMNS if c != "entity_id"]
+FACT_COLUMNS = ["entity_id", *KERNEL_FACT_COLUMNS]
 
-# No-value kernel output (r6): consumers that never read ``value`` (the
+# No-value stream (r6): consumers that never read ``value`` (the
 # range-containment suppression reads only spans/meta) skip the per-match
 # group extraction AND the value bytes' Arrow crossing — measured −12% on
 # the full kernel at sf0.1 batches. Row multiset per (turn, rule, span)
 # is identical to the full stream minus the column.
-KERNEL_NOVALUE_SCHEMA = (
-    "conv_id string, turn_idx int, role string, "
-    "tool string, ts timestamp_ntz, rule_id string, sink string, "
-    "significance int, span_start int, span_end int"
-)
-
 KERNEL_NOVALUE_COLUMNS = [c for c in KERNEL_FACT_COLUMNS if c != "value"]
 
-# Slim fact stream: manual column pruning THROUGH the UDF boundary.
-# Catalyst cannot push a projection into an opaque mapInPandas, so callers
-# that never read entity_id/span/value (the flagship aggregate) request the
-# slim schema instead — at 10^12 turns the full stream ships ~150 B/fact of
-# derived strings through Arrow that the aggregate immediately drops.
-SLIM_FACT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, "
-    "ts timestamp_ntz, rule_id string, sink string, significance int"
-)
-
+# Slim fact stream: the meta columns an aggregate consumes — a projection
+# of the no-value stream, so entity_id's concat never runs and the value
+# never crosses Arrow.
 SLIM_FACT_COLUMNS = [
-    "conv_id",
-    "turn_idx",
-    "role",
-    "tool",
-    "ts",
-    "rule_id",
-    "sink",
-    "significance",
+    c for c in KERNEL_NOVALUE_COLUMNS if c not in ("span_start", "span_end")
 ]
-
-
-def _extract_batch_slim(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
-    """Slim kernel: one output row per match, meta columns only — no span
-    arithmetic, no value extraction, no entity_id concat. Same candidate
-    discipline as the full kernel (vectorized anchor + tool-scope masks);
-    emits exactly the same NUMBER of rows per (turn, rule), so any
-    aggregate over the slim stream equals the same aggregate over the full
-    stream (pinned by test_slim_parse_agg_equivalence)."""
-    import numpy as np
-
-    texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]
-    texts = texts_s.tolist()
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    hits: list[tuple[int, int, int]] = []  # (row, rule, significance)
-    for j, (rule, cre, sfn) in enumerate(bank):
-        mask = masks[j]
-        finditer = cre.finditer
-        base = rule.significance
-        if sfn is None:
-            for i in np.nonzero(mask.to_numpy())[0]:
-                for _ in finditer(texts[i]):
-                    hits.append((i, j, base))
-        else:
-            for i in np.nonzero(mask.to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append((i, j, sfn(m)))
-
-    if hits:
-        ix = np.fromiter((h[0] for h in hits), dtype=np.int64, count=len(hits))
-        rj = np.fromiter((h[1] for h in hits), dtype=np.int64, count=len(hits))
-        sig = np.fromiter((h[2] for h in hits), dtype=np.int32, count=len(hits))
-    else:
-        ix = rj = np.empty(0, dtype=np.int64)
-        sig = np.empty(0, dtype=np.int32)
-    rule_ids = np.array([r.rule_id for r, _, _ in bank], dtype=object)
-    sinks = np.array([r.sink for r, _, _ in bank], dtype=object)
-    res = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[ix],
-            "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
-            "role": pdf["role"].to_numpy()[ix],
-            "tool": pdf["tool"].to_numpy()[ix],
-            "ts": pdf["ts"].to_numpy()[ix],
-            "rule_id": rule_ids[rj],
-            "sink": sinks[rj],
-            "significance": sig,
-        }
-    )
-    res["ts"] = pd.to_datetime(res["ts"])
-    for c in ("conv_id", "role", "tool", "rule_id", "sink"):
-        res[c] = res[c].astype(object)
-    return res[SLIM_FACT_COLUMNS]
 
 
 PARTIAL_AGG_SCHEMA = (
     "conv_id string, tool string, date_bucket timestamp_ntz, sink string, n long"
 )
-
-
-def _extract_batch_partials(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
-    """Map-side combine THROUGH the Arrow boundary: emit per-batch partial
-    counts keyed by (conv_id, tool, date, sink) instead of one row per
-    fact. Spark's partial HashAggregate cannot reach inside a mapInPandas,
-    so a 10k-turn batch that produces ~55k facts would ship 55k Arrow rows
-    the JVM immediately combines; the pandas groupby here shrinks that to
-    the batch's distinct key count (~10-15x fewer rows at this corpus).
-    The sink column is the RULE's sink (pre-reroute): dead-letter routing
-    needs the ontology and stays a JVM broadcast join downstream, so
-    routing logic never gets duplicated in Python."""
-    import numpy as np
-
-    texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    # COUNT-BASED kernel (r3): the output keys only need per-(row, sink)
-    # match COUNTS, so the per-match Python loop (1M match objects + tuple
-    # appends per 100k-row batch) is replaced with pandas' C-looped
-    # ``str.count`` per rule, accumulated into one int array per sink —
-    # and the 10x-larger per-hit frame never materializes. Measured 1.9x
-    # on the identical batch, output bit-identical (multi-match counting
-    # stays exact: str.count counts non-overlapping matches like finditer).
-    n_rows = len(pdf)
-    sink_counts: dict[str, np.ndarray] = {}
-    for j, (rule, cre, _sfn) in enumerate(bank):
-        mnp = masks[j].to_numpy()
-        if not mnp.any():
-            continue
-        cnt = texts_s[mnp].str.count(cre).to_numpy().astype(np.int64)
-        if not cnt.any():
-            continue
-        arr = sink_counts.get(rule.sink)
-        if arr is None:
-            arr = np.zeros(n_rows, dtype=np.int64)
-            sink_counts[rule.sink] = arr
-        arr[mnp] += cnt
-    date = pd.to_datetime(pdf["ts"]).dt.floor("D")
-    base = pd.DataFrame(
-        {"conv_id": pdf["conv_id"], "tool": pdf["tool"], "date_bucket": date}
-    )
-    outs = []
-    for sink, arr in sink_counts.items():
-        nz = arr > 0
-        if not nz.any():
-            continue
-        g = base[nz].copy()
-        g["n"] = arr[nz]
-        g["sink"] = sink
-        outs.append(g)
-    if outs:
-        facts = pd.concat(outs, ignore_index=True)
-        out = (
-            facts.groupby(["conv_id", "tool", "date_bucket", "sink"], dropna=False)["n"]
-            .sum()
-            .reset_index()
-        )
-    else:
-        out = pd.DataFrame(
-            {
-                "conv_id": pd.Series([], dtype=object),
-                "tool": pd.Series([], dtype=object),
-                "date_bucket": pd.Series([], dtype="datetime64[ns]"),
-                "sink": pd.Series([], dtype=object),
-                "n": pd.Series([], dtype="int64"),
-            }
-        )
-    out["n"] = out["n"].astype("int64")
-    out["date_bucket"] = pd.to_datetime(out["date_bucket"])
-    for c in ("conv_id", "tool", "sink"):
-        out[c] = out[c].astype(object)
-    # dropna=False keeps NaN tool groups; Arrow wants None, not NaN
-    out["tool"] = out["tool"].where(pd.notna(out["tool"]), None)
-    return out[["conv_id", "tool", "date_bucket", "sink", "n"]]
 
 
 def _extract_partials_arrow(batch):
@@ -307,7 +154,7 @@ def _extract_partials_arrow(batch):
 
     Equivalence argument: the DuckDB oracle already evaluates this exact
     rule bank through RE2 (``regexp_extract_all``) and hash-matches the
-    Python-re kernels, so RE2-vs-re count parity on this pattern subset is
+    Python-re kernel, so RE2-vs-re count parity on this pattern subset is
     oracle-proven; additionally pinned per-rule by
     test_arrow_partials_kernel_parity. Scoped rules mask their counts by
     role/tool equality BEFORE the per-sink accumulation, exactly like the
@@ -317,7 +164,6 @@ def _extract_partials_arrow(batch):
     duplicate PARTIALS would still aggregate correctly downstream, the
     kernel output should stay deterministic.
     """
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -411,10 +257,10 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
     kernel (_extract_partials_arrow) replaces ``mapInPandas`` + the
     Python-re kernel — the Arrow->pandas conversion of the corpus-sized
     ``text`` column (one Python str object per turn) disappears along
-    with the Python-loop regex counting. The pandas kernel
-    (_extract_batch_partials) stays as the reference implementation;
-    parity is pinned by test_arrow_partials_kernel_parity and the
-    end-to-end test_fused_pipeline_agg_equivalence."""
+    with the Python-loop regex counting. Parity with the Python-re fact
+    kernel's output, grouped by key, is pinned by
+    test_arrow_partials_kernel_parity and the end-to-end
+    test_fused_pipeline_agg_equivalence."""
 
     def run(batches):
         for batch in batches:
@@ -428,7 +274,9 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
 def _extract_batch(
     pdf: pd.DataFrame, bank: list[BankEntry], with_value: bool = True
 ) -> pd.DataFrame:
-    """Apply the compiled bank to one Arrow batch; emit one row per match.
+    """The fact kernel: apply the compiled bank to one Arrow batch and emit
+    one row per match — KERNEL_FACT_COLUMNS, or KERNEL_NOVALUE_COLUMNS
+    when ``with_value=False``.
 
     Hot-loop discipline (measured, not guessed — see git history):
     - RULE-MAJOR iteration with a VECTORIZED literal anchor prefilter:
@@ -442,83 +290,58 @@ def _extract_batch(
       similarity prefilters (comparison.ml:30-38).
     - the loop appends ONE small tuple per fact (not 12 per-column
       appends); row attributes are materialized afterwards by numpy
-      fancy-indexing and the entity_id by vectorized pandas string
-      concatenation — 2.5x faster end-to-end than the naive kernel.
+      fancy-indexing, and the per-hit columns by ``np.fromiter`` (2-3x
+      faster than ``zip(*hits)`` + ``np.array`` on 520k hits).
+    - the value group is chosen per RULE, not per match: group 1 when the
+      pattern has groups, else the whole match.
     """
-    import numpy as np
-
     texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]  # per-tool sub-bank dispatch (rules.py)
     texts = texts_s.tolist()
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    # (row, rule, start, end, value, significance) — or without value in
-    # the no-value variant (separate loop bodies: a per-match branch in
-    # the hot loop would tax the common path)
-    hits: list[tuple] = []
-    if with_value:
-        for j, (rule, cre, sfn) in enumerate(bank):
-            finditer = cre.finditer
-            base = rule.significance
-            for i in np.nonzero(masks[j].to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append(
-                        (
-                            i,
-                            j,
-                            m.start(),
-                            m.end(),
-                            m.group(1) if m.groups() else m.group(0),
-                            base if sfn is None else sfn(m),
-                        )
+    masks = _candidate_masks(texts_s, pdf["tool"], pdf["role"], bank)
+    hits: list[tuple] = []  # (row, rule, start, end, significance, value)
+    for j, (rule, cre, sfn) in enumerate(bank):
+        finditer = cre.finditer
+        base = rule.significance
+        g = (1 if cre.groups else 0) if with_value else None
+        for i in np.nonzero(masks[j].to_numpy())[0]:
+            for m in finditer(texts[i]):
+                hits.append(
+                    (
+                        i,
+                        j,
+                        m.start(),
+                        m.end(),
+                        base if sfn is None else sfn(m),
+                        None if g is None else m.group(g),
                     )
-    else:
-        for j, (rule, cre, sfn) in enumerate(bank):
-            finditer = cre.finditer
-            base = rule.significance
-            for i in np.nonzero(masks[j].to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append(
-                        (i, j, m.start(), m.end(), base if sfn is None else sfn(m))
-                    )
+                )
 
-    if hits:
-        ix = np.fromiter((h[0] for h in hits), dtype=np.int64, count=len(hits))
-        rj = np.fromiter((h[1] for h in hits), dtype=np.int64, count=len(hits))
-    else:
-        ix = rj = np.empty(0, dtype=np.int64)
+    def col(k: int, dtype) -> np.ndarray:
+        return np.fromiter((h[k] for h in hits), dtype=dtype, count=len(hits))
+
+    ix = col(0, np.int64)
+    rj = col(1, np.int64)
     rule_ids = np.array([r.rule_id for r, _, _ in bank], dtype=object)
     sinks = np.array([r.sink for r, _, _ in bank], dtype=object)
-
-    sig_ix = 5 if with_value else 4
     cols = {
         "conv_id": pdf["conv_id"].to_numpy()[ix],
         "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
         "role": pdf["role"].to_numpy()[ix],
         "tool": pdf["tool"].to_numpy()[ix],
-        "ts": pdf["ts"].to_numpy()[ix],
+        # explicit dtype: a zero-match batch must still carry an
+        # Arrow-castable 'ts' (an empty object/float64 column breaks the
+        # timestamp cast; pinned by
+        # test_fact_kernel_empty_batches_are_arrow_castable)
+        "ts": pd.to_datetime(pdf["ts"].to_numpy()[ix]),
         "rule_id": rule_ids[rj],
         "sink": sinks[rj],
-        "significance": np.fromiter(
-            (h[sig_ix] for h in hits), dtype=np.int32, count=len(hits)
-        ),
-        "span_start": np.fromiter(
-            (h[2] for h in hits), dtype=np.int32, count=len(hits)
-        ),
-        "span_end": np.fromiter((h[3] for h in hits), dtype=np.int32, count=len(hits)),
+        "significance": col(4, np.int32),
+        "span_start": col(2, np.int32),
+        "span_end": col(3, np.int32),
     }
     if with_value:
-        cols["value"] = np.array([h[4] for h in hits], dtype=object)
-    res = pd.DataFrame(cols)
-    # entity_id is built JVM-side (parse_facts): concat_ws in codegen beats
-    # five pandas string materializations per batch, and ~35 B/fact of
-    # derived string never crosses the Arrow boundary (r6, guide §4.1)
-    # explicit dtypes: a zero-match batch must still carry Arrow-castable
-    # columns (an empty object/float64 'ts' breaks the timestamp cast)
-    res["ts"] = pd.to_datetime(res["ts"])
-    obj_cols = ("conv_id", "role", "tool", "rule_id", "sink", "value")
-    for c in obj_cols if with_value else obj_cols[:-1]:
-        res[c] = res[c].astype(object)
-    return res[KERNEL_FACT_COLUMNS if with_value else KERNEL_NOVALUE_COLUMNS]
+        cols["value"] = col(5, object)
+    return pd.DataFrame(cols)
 
 
 def parse_facts(
@@ -530,57 +353,46 @@ def parse_facts(
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> fact stream.
 
     ``slim=True`` emits only the meta columns an aggregate consumes
-    (SLIM_FACT_COLUMNS) — manual projection pushdown through the Arrow
-    boundary; row multiset per (turn, rule) is identical to the full
-    stream. ``with_value=False`` (r6) keeps entity_id/spans but skips the
-    per-match group extraction and the value bytes' Arrow crossing —
-    manual column pruning for consumers (the range-containment join) that
-    never read ``value``; Catalyst cannot push the projection into the
-    opaque kernel. The two contradict each other (slim drops the
-    entity_id and spans that ``with_value=False`` keeps), so asking for
-    both raises ``ValueError``."""
+    (SLIM_FACT_COLUMNS); ``with_value=False`` (r6) keeps entity_id/spans
+    but drops ``value`` — for consumers (the range-containment join) that
+    never read it. Both are column selections over the same fact rows, so
+    the row multiset per (turn, rule) is identical to the full stream.
+    Catalyst cannot push a projection into the opaque kernel, so the
+    pandas strategy runs the kernel without values for either, keeping
+    the per-match group extraction and the value bytes off the Arrow
+    boundary. The two contradict each other (slim drops the entity_id and
+    spans that ``with_value=False`` keeps), so asking for both raises
+    ``ValueError``."""
     if slim and not with_value:
         raise ValueError("parse_facts: slim=True contradicts with_value=False; choose one")
     if strategy == "pandas":
-        if slim:
-            kernel = _extract_batch_slim
-        elif with_value:
-            kernel = _extract_batch
-        else:
-            def kernel(pdf, bank):
-                return _extract_batch(pdf, bank, with_value=False)
+        kernel_value = with_value and not slim
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # compile once per task (reference compiles its rule bank once
             # per language engine instance, java_change.ml:788-793)
             bank = compile_bank()
             for pdf in batches:
-                yield kernel(pdf, bank)
+                yield _extract_batch(pdf, bank, with_value=kernel_value)
 
-        if slim:
-            return transcripts.mapInPandas(run, schema=SLIM_FACT_SCHEMA)
-        # entity_id as a JVM projection over the kernel output (r6): same
-        # bytes as the former pandas concat, built in whole-stage codegen,
-        # and never shipped through Arrow
-        schema = KERNEL_FACT_SCHEMA if with_value else KERNEL_NOVALUE_SCHEMA
-        out_cols = KERNEL_FACT_COLUMNS if with_value else KERNEL_NOVALUE_COLUMNS
+        kernel_cols = KERNEL_FACT_COLUMNS if kernel_value else KERNEL_NOVALUE_COLUMNS
+        schema = ", ".join(f"{c} {_KERNEL_TYPES[c]}" for c in kernel_cols)
         facts = transcripts.mapInPandas(run, schema=schema)
-        return facts.select(
+        df = facts.select(
             F.concat_ws(
                 "-", "conv_id", "turn_idx", "span_start", "span_end", "rule_id"
             ).alias("entity_id"),
-            *out_cols,
+            *kernel_cols,
         )
-
-    if strategy == "sql":
+    elif strategy == "sql":
         df = _parse_facts_sql(transcripts)
-        if slim:
-            return df.select(*SLIM_FACT_COLUMNS)
-        if not with_value:
-            return df.select("entity_id", *KERNEL_NOVALUE_COLUMNS)
-        return df
-
-    raise ValueError(f"unknown parse strategy: {strategy}")
+    else:
+        raise ValueError(f"unknown parse strategy: {strategy}")
+    if slim:
+        return df.select(*SLIM_FACT_COLUMNS)
+    if not with_value:
+        return df.select("entity_id", *KERNEL_NOVALUE_COLUMNS)
+    return df
 
 
 def _parse_facts_sql(transcripts: DataFrame) -> DataFrame:

@@ -28,12 +28,12 @@ def routed_facts(
     slim: bool = False,
     with_value: bool = True,
 ) -> DataFrame:
-    """``slim=True`` prunes the fact stream to aggregate-needed columns at
-    the UDF boundary (parse.SLIM_FACT_COLUMNS) — Catalyst cannot project
-    into an opaque mapInPandas, so the pruning is explicit. Salting keys
-    on conv_id alone in slim mode (no entity_id). ``with_value=False``
-    keeps entity_id/spans but drops the value extraction (r6 — for
-    consumers like the range-containment join that never read it)."""
+    """``slim=True`` prunes the fact stream to aggregate-needed columns
+    (parse.SLIM_FACT_COLUMNS): a projection of the no-value fact stream,
+    not a kernel of its own. Salting keys on conv_id alone in slim mode
+    (no entity_id). ``with_value=False`` keeps entity_id/spans but drops
+    the value extraction (r6 — for consumers like the range-containment
+    join that never read it)."""
     facts = parse_facts(
         transcripts, strategy=parse_strategy, slim=slim, with_value=with_value
     )

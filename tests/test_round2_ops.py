@@ -146,7 +146,8 @@ def test_snapshot_mapping_all_classes_present(spark, sf_dir):
 def test_slim_parse_agg_equivalence(spark, sf_dir):
     """The slim (column-pruned) fact stream must aggregate identically to
     the full stream — same row multiset per (turn, rule), narrower
-    columns. The flagship pipeline_agg runs on the slim path."""
+    columns. The SQL-strategy pipeline_agg aggregates the slim stream; the
+    pandas flagship runs fused (test_fused_pipeline_agg_equivalence)."""
     from cca_spark.operators.aggregate import agg_per_sink
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts

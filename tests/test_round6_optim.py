@@ -2,9 +2,12 @@
 took this round keeps a focused parity pin here (the brief's rule —
 optimizations must not change what any query computes).
 
-- the Arrow/RE2 partials kernel vs the pandas/re reference kernel
+- the Arrow/RE2 partials kernel vs the Python-re fact kernel's output,
+  grouped by the partials key
 - the single-generate (inline) SQL parse strategy vs the pandas strategy
 - the JVM-side entity_id projection vs the kernel-derived fields
+- the slim and no-value streams vs projections of the full stream, and the
+  fact kernel's empty batches vs the Arrow schema
 - the dedup materialization changes (distinct-before-persist) vs a
   from-scratch recompute of the verified pair set
 """
@@ -27,13 +30,14 @@ def _multiset_equal(df_a, df_b, cols):
 
 
 def test_arrow_partials_kernel_parity(spark, sf_dir):
-    """The RE2 counting kernel must reproduce the pandas/re reference
-    kernel's partial counts bit-for-bit on real corpus text — per-rule
-    counts, role/tool scoping, date flooring and the grouping tail."""
+    """The RE2 counting kernel must reproduce the Python-re fact kernel's
+    output, grouped by (conv_id, tool, floor(ts, day), sink), bit-for-bit
+    on real corpus text — per-rule counts, role/tool scoping, date
+    flooring and the grouping tail."""
     import pyarrow as pa
 
     from cca_spark.operators.parse import (
-        _extract_batch_partials,
+        _extract_batch,
         _extract_partials_arrow,
         compile_bank,
     )
@@ -41,9 +45,11 @@ def test_arrow_partials_kernel_parity(spark, sf_dir):
 
     pdf = load_transcripts(spark, sf_dir).toPandas()
     batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
-    old = _extract_batch_partials(pdf, compile_bank())
-    new = _extract_partials_arrow(batch).to_pandas()
+    facts = _extract_batch(pdf, compile_bank(), with_value=False)
+    facts["date_bucket"] = facts["ts"].dt.floor("D")
     keys = ["conv_id", "tool", "date_bucket", "sink"]
+    old = facts.groupby(keys, dropna=False).size().rename("n").reset_index()
+    new = _extract_partials_arrow(batch).to_pandas()
     o = old.sort_values(keys).reset_index(drop=True)
     n = new.sort_values(keys).reset_index(drop=True)[old.columns.tolist()]
     assert len(o) == len(n)
@@ -289,3 +295,96 @@ def test_novalue_kernel_matches_full(spark, sf_dir):
     nv_sql = parse_facts(t, strategy="sql", with_value=False)
     assert nv_sql.columns == cols
     assert _multiset_equal(nv, nv_sql, cols)
+
+
+def test_slim_stream_is_full_stream_projection(spark, sf_dir):
+    """Row-level slim pin: for both strategies the slim stream equals the
+    full stream projected onto SLIM_FACT_COLUMNS, as a multiset — over a
+    corpus slice plus null, empty and multi-match turns."""
+    import datetime
+
+    from cca_spark.operators.parse import SLIM_FACT_COLUMNS, parse_facts
+    from cca_spark.transcripts import load_transcripts
+
+    ts = datetime.datetime(2024, 1, 1)
+    edge = spark.createDataFrame(
+        [
+            ("c1", 0, "user", None, None, ts),
+            ("c1", 1, "assistant", "", None, ts),
+            ("c1", 2, "assistant", "```python\nx = 1\nprint(x)\n```", None, ts),
+            ("c2", 0, "assistant", "ERROR 1: a\nERROR 2: b", None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp_ntz",
+    )
+    t = (
+        load_transcripts(spark, sf_dir)
+        .filter(F.col("conv_id") < "conv-00000050")
+        .select(*edge.columns)
+        .unionByName(edge)
+    )
+    for strategy in ("pandas", "sql"):
+        slim = parse_facts(t, strategy=strategy, slim=True)
+        full = parse_facts(t, strategy=strategy).select(*SLIM_FACT_COLUMNS)
+        assert slim.columns == SLIM_FACT_COLUMNS
+        assert slim.count() > 0
+        assert slim.exceptAll(full).count() == 0, strategy
+        assert full.exceptAll(slim).count() == 0, strategy
+        assert slim.filter(F.col("conv_id") == "c2").count() == 2, strategy
+
+
+def test_fact_kernel_empty_batches_are_arrow_castable():
+    """A zero-match batch and an all-null-text batch still come out of the
+    fact kernel with explicit dtypes that Arrow casts to the declared
+    kernel schema (an empty object/float64 ``ts`` would break the
+    timestamp cast), with and without the value column. No SparkSession."""
+    import datetime
+
+    import pyarrow as pa
+
+    from cca_spark.operators.parse import _extract_batch, compile_bank
+
+    full_schema = pa.schema(
+        [
+            ("conv_id", pa.string()),
+            ("turn_idx", pa.int32()),
+            ("role", pa.string()),
+            ("tool", pa.string()),
+            ("ts", pa.timestamp("us")),
+            ("rule_id", pa.string()),
+            ("sink", pa.string()),
+            ("significance", pa.int32()),
+            ("span_start", pa.int32()),
+            ("span_end", pa.int32()),
+            ("value", pa.string()),
+        ]
+    )
+    ts = datetime.datetime(2024, 1, 1)
+
+    def batch(texts):
+        n = len(texts)
+        return pd.DataFrame(
+            {
+                "conv_id": [f"c{i}" for i in range(n)],
+                "turn_idx": pd.Series(range(n), dtype="int32"),
+                "role": ["assistant", "user", "tool"][:n],
+                "text": texts,
+                "tool": [None, None, "bash"][:n],
+                "ts": pd.Series([ts] * n, dtype="datetime64[ns]"),
+            }
+        )
+
+    bank = compile_bank()
+    for pdf in (batch(["hello", "plain words", "nothing here"]), batch([None] * 3)):
+        for with_value in (True, False):
+            schema = (
+                full_schema
+                if with_value
+                else full_schema.remove(full_schema.get_field_index("value"))
+            )
+            out = _extract_batch(pdf, bank, with_value=with_value)
+            assert list(out.columns) == schema.names
+            assert len(out) == 0
+            assert out["ts"].dtype.kind == "M"
+            rb = pa.RecordBatch.from_pandas(out, schema=schema, preserve_index=False)
+            assert rb.num_rows == 0 and rb.schema.equals(schema)
