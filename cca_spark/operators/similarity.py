@@ -54,6 +54,45 @@ def _norm(a):
     )
 
 
+def _vectors(emb: DataFrame, side: str, *extra, id_col: str | None = None) -> DataFrame:
+    """``(<side>_id, <side>_emb, <side>_norm, *extra)``: each vector's norm
+    computed ONCE, below any join — evaluating the interpreted
+    higher-order ``_norm`` per (query, candidate) PAIR costs N_a x N_b
+    norms where N_a + N_b suffice (r6: 1.37x on ann_brute_force)."""
+    return emb.select(
+        F.col("vec_id").alias(id_col or f"{side}_id"),
+        F.col("embedding").alias(f"{side}_emb"),
+        _norm(F.col("embedding")).alias(f"{side}_norm"),
+        *extra,
+    )
+
+
+def _cosine(a: str, b: str):
+    """The one cosine form: 6dp-rounded, over ``_vectors`` columns. The
+    same IEEE expression on the same values wherever the norms are
+    computed, so every path (and its oracle hash) is bit-identical."""
+    return F.round(
+        _dot(F.col(f"{a}_emb"), F.col(f"{b}_emb")) / (F.col(f"{a}_norm") * F.col(f"{b}_norm")),
+        6,
+    )
+
+
+def _rank(scored: DataFrame, part: str, score: str, tie: str, name: str) -> DataFrame:
+    """Add ``name`` = row_number within ``part`` by ``score`` desc, ``tie``
+    asc — a total order, so rankings are engine-independent."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(tie))
+    return scored.withColumn(name, F.row_number().over(w).cast("int"))
+
+
+def _rerank(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact rerank of (query, candidate) ``_vectors`` pairs: per q_id, the
+    k best ``(q_id, c_id, cosine, rank)`` rows, self-matches excluded."""
+    scored = pairs.filter(F.col("q_id") != F.col("c_id")).select(
+        "q_id", "c_id", _cosine("q", "c").alias("cosine")
+    )
+    return _rank(scored, "q_id", "cosine", "c_id", "rank").filter(F.col("rank") <= k)
+
+
 def brute_force_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -64,44 +103,10 @@ def brute_force_topk(
     """Exact cosine top-k: first ``n_queries`` vectors against the corpus.
 
     Query side is broadcast (tiny); corpus side never shuffles until the
-    final per-query top-k (row_number over a k-sized window).
-
-    Norms are hoisted BELOW the cross join (r6): the former plan evaluated
-    the interpreted higher-order ``_norm`` aggregate per (query, corpus)
-    PAIR — N_corpus x N_queries norm computations where N_corpus +
-    N_queries suffice. Same IEEE expression on the same values, so the
-    rounded cosine (and the oracle hash) is bit-identical."""
+    final per-query top-k (row_number over a k-sized window)."""
     emb = _emb(spark, sf_dir) if emb is None else emb
-    queries = F.broadcast(
-        emb.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            _norm(F.col("embedding")).alias("q_norm"),
-        )
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_emb"),
-        _norm(F.col("embedding")).alias("c_norm"),
-    )
-    scored = (
-        queries.crossJoin(corpus)
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    queries = F.broadcast(_vectors(emb.filter(F.col("vec_id") < n_queries), "q"))
+    return _rerank(queries.crossJoin(_vectors(emb, "c")), k)
 
 
 def _table_bucket(emb_col, dims: list[int]):
@@ -162,32 +167,9 @@ def lsh_bucketed_ann(
     emb = _emb(spark, sf_dir)
     qb = F.broadcast(_banded(emb.filter(F.col("vec_id") < n_queries), "q_id"))
     cb = _banded(emb, "c_id")
-    cands = (
-        qb.join(cb, ["t", "bucket"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    qe = F.broadcast(
-        emb.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-        )
-    )
-    ce = emb.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
-    scored = cands.join(qe, "q_id").join(ce, "c_id").select(
-        "q_id",
-        "c_id",
-        F.round(
-            _dot(F.col("q_emb"), F.col("c_emb"))
-            / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    cands = qb.join(cb, ["t", "bucket"]).select("q_id", "c_id").distinct()
+    qe = F.broadcast(_vectors(emb.filter(F.col("vec_id") < n_queries), "q"))
+    return _rerank(cands.join(qe, "q_id").join(_vectors(emb, "c"), "c_id"), k)
 
 
 def embedding_cosine_near_dup(
@@ -197,19 +179,11 @@ def embedding_cosine_near_dup(
     AND cosine >= threshold — the embedding member of the dedup family
     (dedup.py)."""
     emb = _emb(spark, sf_dir)
-    cands = lsh_candidate_pairs(emb)
-    ea = emb.select(F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("doc_b"), F.col("embedding").alias("eb"))
     return (
-        cands.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb"))), 6
-            ).alias("cosine"),
-        )
+        lsh_candidate_pairs(emb)
+        .join(_vectors(emb, "a", id_col="doc_a"), "doc_a")
+        .join(_vectors(emb, "b", id_col="doc_b"), "doc_b")
+        .select("doc_a", "doc_b", _cosine("a", "b").alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -268,31 +242,33 @@ def _ivf_centroids(emb: DataFrame) -> DataFrame:
     ).select(F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cent_emb"))
 
 
-def _centroid_ranks(emb: DataFrame, cents: DataFrame | None = None) -> DataFrame:
+def _centroid_ranks(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, embedding, centroid_id, r): every vector's centroids
     ranked by cosine (6dp-rounded, centroid_id tie-break). Broadcast the
     tiny centroid table, score all cells in one projection."""
-    cents = F.broadcast(cents if cents is not None else _ivf_centroids(emb))
-    scored = emb.crossJoin(cents).select(
-        "vec_id",
-        "embedding",
-        "centroid_id",
-        F.round(
-            _dot(F.col("embedding"), F.col("cent_emb"))
-            / (_norm(F.col("embedding")) * _norm(F.col("cent_emb"))),
-            6,
-        ).alias("cent_cos"),
+    cents = F.broadcast(
+        cents.select(
+            "centroid_id",
+            F.col("cent_emb").alias("c_emb"),
+            _norm(F.col("cent_emb")).alias("c_norm"),
+        )
     )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cent_cos"), F.asc("centroid_id"))
-    return scored.withColumn("r", F.row_number().over(w))
+    scored = _vectors(emb, "v", id_col="vec_id").crossJoin(cents).select(
+        "vec_id",
+        F.col("v_emb").alias("embedding"),
+        "centroid_id",
+        _cosine("v", "c").alias("cent_cos"),
+    )
+    return _rank(scored, "vec_id", "cent_cos", "centroid_id", "r")
 
 
-def ivf_assign(emb: DataFrame) -> DataFrame:
-    """Assign every vector to its nearest centroid — the classic IVF build
-    pass. At 10^12 scale: one broadcast join, no shuffle until the
+def ivf_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """Assign every vector to its nearest centroid of ``cents`` — the one
+    IVF assignment step, used by the Lloyd iterations and by the probe's
+    corpus side. At 10^12 scale: one broadcast join, no shuffle until the
     per-vector argmin window (partitioned by vec_id, so state is K rows)."""
     return (
-        _centroid_ranks(emb)
+        _centroid_ranks(emb, cents)
         .filter(F.col("r") == 1)
         .select("vec_id", "embedding", F.col("centroid_id").alias("cell"))
     )
@@ -314,9 +290,10 @@ def ivf_train_centroids(
     assign (broadcast score + argmin window) then recompute each cell's
     element-wise mean via posexplode/groupBy (no UDF, no driver-side
     vectors). Seeded from the deterministic stride centroids; ``iters``
-    bounded like every other fixpoint in this repo. At 10^12 vectors each
-    iteration is one broadcast join + one (cell, pos)-keyed aggregation —
-    the standard distributed k-means step.
+    bounded like every other fixpoint in this repo (``iters=0`` returns
+    the stride centroids). At 10^12 vectors each iteration is one
+    broadcast join + one (cell, pos)-keyed aggregation — the standard
+    distributed k-means step.
 
     Cross-engine determinism (VERDICT r04 #8): each Lloyd mean is rounded
     to 6dp FIXED POINT inside the loop and kept as double (no float
@@ -331,12 +308,7 @@ def ivf_train_centroids(
     stride quantizer at equal nprobe)."""
     cents = _ivf_centroids(emb)
     for _ in range(iters):
-        assigned = (
-            _centroid_ranks(emb, cents)
-            .filter(F.col("r") == 1)
-            .select("vec_id", "embedding", F.col("centroid_id").alias("cell"))
-        )
-        pos = assigned.select(
+        pos = ivf_assign(emb, cents).select(
             "cell", F.posexplode("embedding").alias("pos", "val")
         )
         means = pos.groupBy("cell", "pos").agg(
@@ -368,9 +340,12 @@ def ivf_ann_trained(
     emb: DataFrame | None = None,
 ) -> DataFrame:
     """IVF ANN over TRAINED centroids (Lloyd-iterated) with multi-cell
-    probing — the production IVF configuration. FULLY hash-oracled as of
-    r5: Lloyd means are 6dp fixed-point (see ivf_train_centroids), so the
-    driver checks this against the unrolled-SQL Lloyd oracle
+    probing — the production IVF configuration, and the one IVF probe:
+    each query searches its ``nprobe`` nearest cells (corpus vectors sit in
+    exactly one cell, ``ivf_assign``), then the exact rerank shared with
+    ``brute_force_topk``. FULLY hash-oracled as of r5: Lloyd means are 6dp
+    fixed-point (see ivf_train_centroids), so the driver checks this
+    against the unrolled-SQL Lloyd oracle
     (oracles_training.ivf_ann_trained_sql) bit-for-bit. Additionally a
     recall floor (>= 0.9 at nprobe<=4 on the
     clustered corpus) is asserted in pytest — on the driver's ISOTROPIC
@@ -379,38 +354,12 @@ def ivf_ann_trained(
     and the isotropic curve is reported in BENCH.md."""
     emb = _emb(spark, sf_dir) if emb is None else emb
     cents = ivf_train_centroids(emb, iters=iters)
-    ranks = _centroid_ranks(emb, cents)
-    assigned = ranks.filter(F.col("r") == 1).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("cell")
+    probes = _centroid_ranks(emb, cents).filter(
+        (F.col("vec_id") < n_queries) & (F.col("r") <= nprobe)
     )
-    queries = F.broadcast(
-        ranks.filter((F.col("vec_id") < n_queries) & (F.col("r") <= nprobe)).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("centroid_id").alias("cell"),
-        )
-    )
-    corpus = assigned.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
-    )
-    scored = (
-        queries.join(corpus, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    queries = F.broadcast(_vectors(probes, "q", F.col("centroid_id").alias("cell")))
+    corpus = _vectors(ivf_assign(emb, cents), "c", "cell")
+    return _rerank(queries.join(corpus, "cell"), k)
 
 
 def ivf_ann_nprobe(
@@ -420,41 +369,10 @@ def ivf_ann_nprobe(
     n_queries: int = 20,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF ANN with multi-cell probing: each query searches its ``nprobe``
-    nearest cells (corpus vectors stay in exactly one cell). Recall rises
-    toward exact as nprobe -> K while cost stays nprobe/K of the corpus —
-    the standard IVF recall/cost dial; pytest asserts recall(nprobe=2) >=
-    recall(nprobe=1) against the brute-force baseline."""
-    emb = _emb(spark, sf_dir)
-    ranks = _centroid_ranks(emb)
-    assigned = ranks.filter(F.col("r") == 1).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("cell")
-    )
-    queries = F.broadcast(
-        ranks.filter((F.col("vec_id") < n_queries) & (F.col("r") <= nprobe)).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("centroid_id").alias("cell"),
-        )
-    )
-    corpus = assigned.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
-    )
-    scored = (
-        queries.join(corpus, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    """IVF ANN with multi-cell probing over the stride centroids
+    (``ivf_ann_trained`` with no Lloyd iteration). Recall rises toward
+    exact as nprobe -> K while cost stays nprobe/K of the corpus — the
+    standard IVF recall/cost dial; pytest asserts recall(nprobe=2) >=
+    recall(nprobe=1) against the brute-force baseline, and that
+    nprobe=K returns exactly the brute-force rows."""
+    return ivf_ann_trained(spark, sf_dir, k=k, n_queries=n_queries, nprobe=nprobe, iters=0)

@@ -1,28 +1,32 @@
 """Synthesize a 10x sf directory (key-shifted replicas of sf0.1) and
 smoke every sf-dir bench query on it: no crashes, sane walls, output
 rows scaling plausibly. NOT an oracle check — scale insurance only
-(the driver's measurement may use a larger driver-generated sf)."""
+(production runs may use a larger sf).
+
+Usage: python scripts/sfdir_10x_smoke.py <sf0.1_dir> <work_dir>
+
+The replicated tables are written once into ``work_dir`` (reused while its
+``_DONE`` marker exists); one JSON line per query goes to stdout. Run it
+before and after any change to parse, dedup or write: row counts must be
+identical and no query may grow super-linearly."""
 import json
 import os
-import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from cca_spark.session import get_spark
 
-SRC = "/root/testdata/sf0.1"
-DST = "/tmp/sfbig"
 R = 10
 
 
-def build(spark):
-    if os.path.exists(os.path.join(DST, "_DONE")):
+def build(spark, src, dst):
+    if os.path.exists(os.path.join(dst, "_DONE")):
         return
-    os.makedirs(DST, exist_ok=True)
+    os.makedirs(dst, exist_ok=True)
     # integer-keyed tables: offset every key-ish integer column by a
     # replica stride far above the real key range
     strides = {
@@ -37,7 +41,7 @@ def build(spark):
         "region": {},
     }
     for t, shifts in strides.items():
-        df = spark.read.parquet(f"{SRC}/{t}.parquet")
+        df = spark.read.parquet(f"{src}/{t}.parquet")
         if shifts:
             reps = []
             for r in range(R):
@@ -50,13 +54,13 @@ def build(spark):
                 out = out.unionByName(d)
         else:
             out = df  # dimension lookup tables stay as-is
-        out.write.mode("overwrite").parquet(f"{DST}/{t}.parquet")
+        out.write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
         print("built", t, flush=True)
     # events: conv identity derives from user_id (hot conv = user_id%10==0,
     # transcripts_sql) — shift user_id by a multiple of 10 so replica hot
     # convs stay hot (mod-10 class preserved) yet conv keys stay disjoint;
     # event_id shifted to keep turn tie-break and synth-text variation
-    ev = spark.read.parquet(f"{SRC}/events.parquet")
+    ev = spark.read.parquet(f"{src}/events.parquet")
     reps = []
     for r in range(R):
         reps.append(
@@ -66,17 +70,18 @@ def build(spark):
     out = reps[0]
     for d in reps[1:]:
         out = out.unionByName(d)
-    out.write.mode("overwrite").parquet(f"{DST}/events.parquet")
+    out.write.mode("overwrite").parquet(f"{dst}/events.parquet")
     print("built events", flush=True)
-    open(os.path.join(DST, "_DONE"), "w").write("ok")
+    open(os.path.join(dst, "_DONE"), "w").write("ok")
 
 
 def main():
+    src, dst = sys.argv[1], sys.argv[2]
     spark = get_spark(app_name="sfbig_smoke")
     from cca_spark.dist import ensure_on_executors
 
     ensure_on_executors(spark)
-    build(spark)
+    build(spark, src, dst)
 
     from cca_spark.operators import corpus_prep as CP
     from cca_spark.operators import decontam as DC
@@ -87,21 +92,21 @@ def main():
     from cca_spark.operators import textstats as TS
 
     queries = {
-        "pricing_summary": lambda: Rl.pricing_summary(spark, DST).count(),
-        "join_chain_revenue": lambda: Rl.join_chain_revenue(spark, DST).count(),
-        "sessionize_events": lambda: Rl.sessionize_events(spark, DST).count(),
-        "range_containment": lambda: Rl.range_containment_suppression(spark, DST).count(),
-        "dedup_minhash_lsh": lambda: DD.minhash_lsh_pairs(spark, DST).count(),
-        "ngram_containment": lambda: DD.ngram_containment_pairs(spark, DST).count(),
-        "ann_brute_force": lambda: SIM.brute_force_topk(spark, DST).count(),
-        "tfidf_top_terms": lambda: TS.tfidf_top_terms(spark, DST).count(),
-        "bm25_retrieval": lambda: TS.bm25_retrieval(spark, DST).count(),
-        "pii_scrub": lambda: RED.pii_scrub(spark, DST).count(),
-        "ngram_decontaminate": lambda: DC.ngram_decontaminate(spark, DST).count(),
-        "repetition_filter": lambda: DC.repetition_filter(spark, DST).count(),
-        "lm_unigram_score": lambda: CP.lm_unigram_logprob(spark, DST).count(),
-        "pack_token_budget": lambda: CP.pack_token_budget(spark, DST).count(),
-        "mixture_weighted_sample": lambda: CP.mixture_weighted_sample(spark, DST).count(),
+        "pricing_summary": lambda: Rl.pricing_summary(spark, dst).count(),
+        "join_chain_revenue": lambda: Rl.join_chain_revenue(spark, dst).count(),
+        "sessionize_events": lambda: Rl.sessionize_events(spark, dst).count(),
+        "range_containment": lambda: Rl.range_containment_suppression(spark, dst).count(),
+        "dedup_minhash_lsh": lambda: DD.minhash_lsh_pairs(spark, dst).count(),
+        "ngram_containment": lambda: DD.ngram_containment_pairs(spark, dst).count(),
+        "ann_brute_force": lambda: SIM.brute_force_topk(spark, dst).count(),
+        "tfidf_top_terms": lambda: TS.tfidf_top_terms(spark, dst).count(),
+        "bm25_retrieval": lambda: TS.bm25_retrieval(spark, dst).count(),
+        "pii_scrub": lambda: RED.pii_scrub(spark, dst).count(),
+        "ngram_decontaminate": lambda: DC.ngram_decontaminate(spark, dst).count(),
+        "repetition_filter": lambda: DC.repetition_filter(spark, dst).count(),
+        "lm_unigram_score": lambda: CP.lm_unigram_logprob(spark, dst).count(),
+        "pack_token_budget": lambda: CP.pack_token_budget(spark, dst).count(),
+        "mixture_weighted_sample": lambda: CP.mixture_weighted_sample(spark, dst).count(),
     }
     out = {}
     for name, fn in queries.items():

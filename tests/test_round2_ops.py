@@ -57,6 +57,23 @@ def test_ivf_nprobe_recall_monotone(spark, sf_dir):
     assert r2 > 0.3, f"nprobe=2 recall suspiciously low: {r2}"
 
 
+def test_ivf_probing_every_cell_equals_brute_force(spark, sf_dir):
+    """nprobe = K probes every cell, so IVF must return exactly the
+    brute-force rows, cosine and rank included: the exact and IVF paths
+    share one rerank and one cosine form."""
+    from cca_spark.operators.similarity import (
+        N_IVF_CENTROIDS,
+        brute_force_topk,
+        ivf_ann_nprobe,
+    )
+
+    cols = ["q_id", "c_id", "cosine", "rank"]
+    exact = sorted(map(tuple, brute_force_topk(spark, sf_dir).select(*cols).collect()))
+    ivf = ivf_ann_nprobe(spark, sf_dir, nprobe=N_IVF_CENTROIDS).select(*cols)
+    assert len(exact) == 60
+    assert sorted(map(tuple, ivf.collect())) == exact
+
+
 def test_ivf_trained_centroids_recall(spark, sf_dir):
     """Lloyd-trained centroids must not COLLAPSE recall vs the stride seed
     at equal nprobe. On the driver's isotropic random embeddings the two
